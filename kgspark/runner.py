@@ -7,9 +7,12 @@ re-expressed as checkpointed DataFrame stages over the catalog.
        mentions ──► edges ──► labels ──► entities/attrs/
                                           proxy+final triples [global]
 
-Per-bucket stages resume idempotently at bucket granularity; global
-stages at stage granularity (fingerprint of their input).  Lineage +
-counts go to the ``_checkpoint`` table (checkpoint.py).
+This module holds only the stage DAG: which stages exist, what each
+reads and how it computes.  Every stage resumes by the one rule in
+checkpoint.py — a part (a bucket of a per-bucket stage, the whole of a
+global stage) is skipped only when its newest ``_checkpoint`` row is
+complete, its input fingerprint and row count match, and its output
+table exists.
 
 Deployment: on a real cluster this module is the ``spark-submit``
 entry point —
@@ -31,67 +34,6 @@ from . import checkpoint as CP
 from . import extract, fixtures, link
 from . import generate as gen
 from .catalog import ParquetCatalog, with_bucket
-
-
-def _global_fingerprint(df: DataFrame, cols: list[str]) -> tuple[int, int]:
-    """(order-insensitive xor of row hashes, row count) — BOTH matched
-    at resume so even-duplicate xor cancellation can't fake 'complete'."""
-    row = df.select(
-        F.bit_xor(F.xxhash64(*cols)).alias("fp"), F.count("*").alias("n")
-    ).collect()[0]
-    return int(row["fp"] or 0), int(row["n"] or 0)
-
-
-_MASK64 = (1 << 64) - 1
-
-
-def _mix_fps(*vals: int) -> int:
-    """Fold several (fingerprint, count) ints into one signed-64 value
-    (FNV-1a-style, order-sensitive) — global stages depend on SEVERAL
-    inputs (mentions AND embeddings AND base triples), and each must
-    invalidate the checkpoint when it changes."""
-    acc = 0x9E3779B97F4A7C15
-    for v in vals:
-        acc = ((acc ^ (v & _MASK64)) * 0x100000001B3) & _MASK64
-    return acc - (1 << 64) if acc >= (1 << 63) else acc
-
-
-def _run_global_stage(
-    spark: SparkSession,
-    cat: ParquetCatalog,
-    stage: str,
-    input_fp: int,
-    input_rows: int,
-    compute,
-    out_table: str,
-) -> DataFrame:
-    """Stage-granular resume for non-bucketed (graph-global) stages.
-    Resume requires a complete checkpoint matching BOTH the input
-    fingerprint and the input row count (same guard the bucketed path
-    has)."""
-    cp = CP.read_checkpoints(spark, cat)
-    if cp is not None:
-        done = (
-            CP.latest_state(cp.filter(F.col("stage") == stage))
-            .filter(
-                (F.col("status") == "complete")
-                & (F.col("part_id") == -1)
-                & (F.col("input_fingerprint") == input_fp)
-                & (F.col("row_count") == input_rows)
-            )
-            .count()
-        )
-        if done and cat.exists(out_table):
-            return cat.read(spark, out_table)
-    out = compute()
-    cat.write(out, out_table)
-    out = cat.read(spark, out_table)
-    fps = spark.createDataFrame(
-        [(-1, input_fp, input_rows)],
-        "bucket int, input_fingerprint long, row_count long",
-    )
-    CP.write_checkpoint_rows(cat, stage, fps)
-    return out
 
 
 def run_all(
@@ -143,56 +85,56 @@ def run_all(
     )
 
     # --- global (graph-wide) stages -----------------------------------------
+    # each global stage resumes on the fingerprints of everything it
+    # reads: edges/labels/entities/attrs/props derive from mentions AND
+    # the embedding table (via link scoring) — embedding changes must
+    # invalidate them too (they'd otherwise serve stale from checkpoint)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    m_fp, m_n = _global_fingerprint(
-        mentions, ["doc_id", "span_pos", "mention_ord", "mention_iri"]
+    mentions_in, emb_in, spans_in, quads_in = CP.global_fingerprints(
+        (mentions, ["doc_id", "span_pos", "mention_ord", "mention_iri"]),
+        (emb, ["vec_id", "label", "embedding"]),
+        (flat, ["doc_id", "span_pos", "media_ref"]),
+        (base_triples, ["g", "s", "p", "o"]),
     )
-    # edges/labels/entities/attrs all derive from mentions AND the
-    # embedding table (via link scoring) — embedding changes must
-    # invalidate them (they'd otherwise serve stale from checkpoint)
-    e_fp, e_n = _global_fingerprint(emb, ["vec_id", "label", "embedding"])
-    me_fp, me_n = _mix_fps(m_fp, m_n, e_fp, e_n), m_n + e_n
+    me = [mentions_in, emb_in]
 
-    edges = _run_global_stage(
-        spark, cat, "edges", me_fp, me_n,
+    edges = CP.run_global_stage(
+        spark, cat, "edges", me,
         lambda: link.scored_edges(mentions, emb), "edges",
     )
 
-    labels = _run_global_stage(
-        spark, cat, "labels", me_fp, me_n,
+    labels = CP.run_global_stage(
+        spark, cat, "labels", me,
         lambda: cc_mod.connected_components(
             edges, mentions.select(F.col("norm_text").alias("node")).distinct()
         ),
         "labels",
     )
 
-    entities = _run_global_stage(
-        spark, cat, "entities", me_fp, me_n,
+    entities = CP.run_global_stage(
+        spark, cat, "entities", me,
         lambda: gen.entities_df(mentions, labels), "entities",
     )
-    attrs = _run_global_stage(
-        spark, cat, "entity_attrs", me_fp, me_n,
+    attrs = CP.run_global_stage(
+        spark, cat, "entity_attrs", me,
         lambda: gen.entity_attrs_df(mentions, labels), "entity_attrs",
     )
     # D7 full-form property index (spindle writes its index tables; the
     # multi-predicate props are part of the materialized catalog)
-    props = _run_global_stage(
-        spark, cat, "entity_props", me_fp, me_n,
+    props = CP.run_global_stage(
+        spark, cat, "entity_props", me,
         lambda: gen.entity_props(mentions, labels), "entity_props",
     )
     # license/media selection index (spindle license.c/media.c) — also
     # depends on the span table (media spans feed the candidates)
-    s_fp, s_n = _global_fingerprint(flat, ["doc_id", "span_pos", "media_ref"])
-    media_idx = _run_global_stage(
-        spark, cat, "entity_media", _mix_fps(me_fp, me_n, s_fp, s_n),
-        me_n + s_n,
+    media_idx = CP.run_global_stage(
+        spark, cat, "entity_media", me + [spans_in],
         lambda: gen.entity_media(mentions, labels, flat), "entity_media",
     )
     # final triples additionally depend on the base-quad table (media/
     # lang triples come from spans, not mentions)
-    b_fp, b_n = _global_fingerprint(base_triples, ["g", "s", "p", "o"])
-    triples = _run_global_stage(
-        spark, cat, "triples", _mix_fps(me_fp, me_n, b_fp, b_n), me_n + b_n,
+    triples = CP.run_global_stage(
+        spark, cat, "triples", me + [quads_in],
         lambda: extract_final_triples(base_triples, mentions, labels), "triples",
     )
 

@@ -12,6 +12,10 @@ from kgspark import checkpoint as CP
 from kgspark import runner
 from kgspark.catalog import ParquetCatalog
 
+# Spark jobs a no-op re-run of the clean_run warehouse may submit (34
+# measured at local[8])
+JOBS_BOUND = 36
+
 
 def _triples(out):
     return set(map(tuple, out["triples"].select("s", "p", "o").collect()))
@@ -72,6 +76,39 @@ def test_rerun_is_noop_and_stable(spark, sf_dir, clean_run):
     assert cp1 == cp2, "re-run of a completed pipeline must not reprocess"
 
 
+def test_noop_rerun_job_count(spark, sf_dir, clean_run):
+    """A re-run with nothing to do costs bookkeeping only: per stage one
+    fingerprint collect, one log read and one output read-back, plus the
+    input reads and one job for all global fingerprints."""
+    wh, _, _ = clean_run
+    sc = spark.sparkContext
+    sc.setJobGroup("noop_rerun", "no-op re-run of a finished warehouse")
+    try:
+        runner.run_all(spark, sf_dir, wh, n_buckets=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("noop_rerun")
+    assert 0 < len(jobs) <= JOBS_BOUND, len(jobs)
+
+
+def test_missing_output_tables_are_recomputed(
+    spark, sf_dir, clean_run, tmp_path_factory
+):
+    """Log rows say complete but the output table is gone → the stage
+    recomputes instead of failing on the missing path (one bucketed and
+    one global stage)."""
+    wh_src, want, clean_out = clean_run
+    wh = str(tmp_path_factory.mktemp("wh_missing"))
+    shutil.copytree(wh_src, wh, dirs_exist_ok=True)
+    for table in ["base_triples", "labels"]:
+        shutil.rmtree(f"{wh}/{table}")
+    out = runner.run_all(spark, sf_dir, wh, n_buckets=8)
+    assert _triples(out) == want
+    assert out["base_triples"].count() == clean_out["base_triples"].count()
+    assert out["labels"].count() == clean_out["labels"].count()
+
+
 def test_changed_input_invalidates_fingerprint(spark, clean_run, tmp_path_factory):
     """Fingerprint mismatch → bucket re-processed (at-least-once with
     idempotent effect)."""
@@ -98,20 +135,50 @@ def test_changed_input_invalidates_fingerprint(spark, clean_run, tmp_path_factor
     )
     assert out2.filter(F.col("out") == "CHANGED").count() == 1
     assert out2.count() == n1
-    cp = CP.latest_state(cat.read(spark, CP.CHECKPOINT_TABLE))
-    assert cp.filter(F.col("stage") == "s").count() == 4
+    assert len(CP.latest_rows(spark, cat, "s")) == 4
+
+
+def test_triple_counts_do_not_rerun_transform(spark, tmp_path_factory):
+    """count_as_triples takes the per-bucket counts from the write
+    itself: the transform runs once per input row, and the logged
+    triple_count of each bucket equals its output rows."""
+    from kgspark.catalog import with_bucket
+
+    cat = ParquetCatalog(str(tmp_path_factory.mktemp("wh_once")), 4)
+    calls = spark.sparkContext.accumulator(0)
+
+    # an opaque kernel, like the extraction stages': no optimizer rule
+    # prunes or duplicates it
+    def upper(batches):
+        for pdf in batches:
+            calls.add(len(pdf))
+            yield pdf.assign(out=pdf["payload"].str.upper())
+
+    df = with_bucket(spark.createDataFrame(
+        [(i, f"p{i}") for i in range(20)], "doc_id long, payload string"
+    ), 4)
+    out = CP.run_bucketed_stage(
+        spark, cat, "once", df,
+        lambda d: d.mapInPandas(
+            upper, "doc_id long, payload string, bucket int, out string"
+        ),
+        "once_out", count_as_triples=True,
+    )
+    assert calls.value == 20
+    want = {r["bucket"]: r["count"] for r in out.groupBy("bucket").count().collect()}
+    got = {p: r["triple_count"] for p, r in CP.latest_rows(spark, cat, "once").items()}
+    assert got == want
 
 
 def test_checkpoint_metrics_lineage(spark, sf_dir, clean_run):
     wh, _, out = clean_run
     cat = ParquetCatalog(wh, 8)
-    cp = CP.latest_state(cat.read(spark, CP.CHECKPOINT_TABLE))
-    base = cp.filter(F.col("stage") == "base_triples")
+    base = CP.latest_rows(spark, cat, "base_triples")
     # per-bucket triple counts sum to the stage output size
-    total = base.agg(F.sum("triple_count")).collect()[0][0]
+    total = sum(r["triple_count"] for r in base.values())
     assert total == out["base_triples"].count()
     # every bucketed stage has one complete row per non-empty bucket
-    stages = {r["stage"] for r in cp.collect()}
+    stages = {r["stage"] for r in CP.read_checkpoints(spark, cat).collect()}
     assert {"spans", "mentions", "media_features", "base_triples",
             "edges", "labels", "entities", "entity_attrs", "triples"} <= stages
 
@@ -146,7 +213,7 @@ def test_graph_replace_keyed_on_doc_graph(spark, sf_dir, clean_run, tmp_path_fac
     edited.write.mode("overwrite").parquet(f"{edited_dir}/documents.parquet")
     shutil.copy(f"{sf_dir}/embeddings.parquet", f"{edited_dir}/embeddings.parquet")
 
-    runner.run_all(spark, edited_dir, wh, n_buckets=8)
+    resumed = runner.run_all(spark, edited_dir, wh, n_buckets=8)
     after = {
         tuple(r)
         for r in ParquetCatalog(wh, 8).read(spark, "base_triples")
@@ -160,6 +227,12 @@ def test_graph_replace_keyed_on_doc_graph(spark, sf_dir, clean_run, tmp_path_fac
         "the edited doc's graph must have been replaced"
     )
     assert any(t[0] == g and t[3] == f"ex://{source}/customer" for t in after)
+    # global stages see the edit too: none may serve a stale checkpoint
+    fresh = runner.run_all(
+        spark, edited_dir, str(tmp_path_factory.mktemp("wh_edited_fresh")),
+        n_buckets=8,
+    )
+    assert _triples(resumed) == _triples(fresh)
 
 
 def test_entity_media_stage_materialized_and_correct(spark, sf_dir, clean_run):
